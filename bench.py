@@ -32,7 +32,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from log_analysis_system_spark.queries import QUERIES, load_all
-from log_analysis_system_spark.session import get_spark
+from log_analysis_system_spark.session import default_cpus, get_spark
 
 # Headline set: the reference-parity jobs (BASELINE.md table) + heaviest
 # extension operators. Round 4 folded in the previously non-headline heavy
@@ -187,11 +187,12 @@ def _calib_unit(_):
     return x
 
 
-def calibrate_parallel(workers: int = 32) -> float:
+def calibrate_parallel(workers: int) -> float:
     """Time ``workers`` copies of the calib loop run concurrently — the
     host's effective PARALLEL capacity, which the single-thread probe
-    cannot see. This container's 32 vCPUs are sometimes heavily
-    oversubscribed by the hypervisor (measured this round: 38% steal +
+    cannot see; ``workers`` is the session's local parallelism. A
+    32-vCPU bench host was sometimes heavily oversubscribed by the
+    hypervisor (measured then: 38% steal +
     21% involuntary idle under full load → ~13 effective cores while
     calib_sec stayed nominal); that state uniformly inflates every Spark
     stage while leaving calib_sec untouched. Comparing BENCH files:
@@ -406,7 +407,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").split("sf")[-1]
     loadavg = read_loadavg()
     calib_sec = calibrate()
-    calib_par_sec = calibrate_parallel()
+    calib_par_sec = calibrate_parallel(default_cpus())
     print(
         f"# loadavg={loadavg} calib_sec={calib_sec} "
         f"calib_par_sec={calib_par_sec}",

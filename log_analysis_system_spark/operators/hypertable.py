@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sinks.partials import PartialStore
+
 #: measure columns every rollup table carries, and how they merge.
 _MERGES = {
     "n_events": F.sum,
@@ -75,6 +77,10 @@ def merge_rollups(*rollups: DataFrame) -> DataFrame:
 
 # ---------------------------------------------- persisted incremental store
 
+def _store(store_dir: str) -> PartialStore:
+    return PartialStore(f"{store_dir}/batches")
+
+
 def append_rollup_batch(
     events_batch: DataFrame,
     store_dir: str,
@@ -85,56 +91,19 @@ def append_rollup_batch(
     value_col: str = "value",
 ) -> None:
     """Incremental-maintenance write path: roll up ONE ingest batch and
-    persist its partial aggregates under ``batches/batch=<id>`` —
-    append-only and NATURALLY idempotent: a replayed batch overwrites its
-    own directory with byte-identical deterministic content, so no marker
-    file or read-modify-write of history is needed (the failure mode a
-    merge-into-place refresh has: replay after a crash between data write
-    and marker double-merges the delta). History is never rewritten;
-    serving merges partials (`serve_rollup`); `compact_rollup` bounds the
-    batch-dir count."""
-    rollup_events(
-        events_batch, bucket=bucket, keys=keys, ts_col=ts_col,
-        value_col=value_col,
-    ).write.mode("overwrite").parquet(f"{store_dir}/batches/batch={batch_id}")
-
-
-def _live_dirs(store_dir: str, as_of_batch: int | None = None) -> list[str]:
-    """Current batch/base dirs: the compaction pointer names a base dir;
-    batch dirs newer than the pointer's high-water mark are live. With
-    ``as_of_batch``, only partials at or below that batch id participate —
-    the snapshot-read path. Snapshots below the compaction high-water mark
-    no longer exist (their batch dirs were folded into the base), which is
-    the standard retention contract of a compacting store: raise a clear
-    error instead of silently serving the wrong snapshot."""
-    import json
-    import os
-
-    ptr = os.path.join(store_dir, "_base_pointer.json")
-    base, upto = None, -1
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            meta = json.load(f)
-        base, upto = meta["base"], meta["upto"]
-    if as_of_batch is not None and as_of_batch < upto:
-        raise ValueError(
-            f"snapshot batch={as_of_batch} predates the compaction "
-            f"high-water mark (batch={upto}); compacted history is not "
-            f"retained — raise the compaction cadence or archive batch "
-            f"dirs to keep deeper time travel"
-        )
-    dirs = []
-    if base:
-        dirs.append(os.path.join(store_dir, base))
-    broot = os.path.join(store_dir, "batches")
-    if os.path.isdir(broot):
-        for d in sorted(os.listdir(broot)):
-            if not d.startswith("batch="):
-                continue
-            bid = int(d.split("=")[1])
-            if bid > upto and (as_of_batch is None or bid <= as_of_batch):
-                dirs.append(os.path.join(broot, d))
-    return dirs
+    commit its partial aggregates as batch ``batch_id`` of the partial
+    store (`sinks.partials` states the commit and replay rule). History
+    is never rewritten — the failure mode a merge-into-place refresh has
+    (replay after a crash between data write and marker double-merges the
+    delta) cannot occur; serving merges partials (`serve_rollup`);
+    `compact_rollup` bounds the batch-dir count."""
+    _store(store_dir).write(
+        rollup_events(
+            events_batch, bucket=bucket, keys=keys, ts_col=ts_col,
+            value_col=value_col,
+        ),
+        batch_id,
+    )
 
 
 def serve_rollup(
@@ -148,49 +117,20 @@ def serve_rollup(
     ``as_of_batch`` gives a TIME-TRAVEL read: the view as of that ingest
     batch (inclusive). Because history is append-only partials, a snapshot
     is just "merge fewer dirs" — no undo log, no version manifests beyond
-    the compaction pointer. Snapshots older than the last compaction are
-    gone by design (ValueError); everything newer stays readable until the
-    next compaction folds it in."""
-    dirs = _live_dirs(store_dir, as_of_batch)
-    if not dirs:
-        raise FileNotFoundError(f"no rollup partials under {store_dir}")
-    return merge_rollups(*[spark.read.parquet(d) for d in dirs])
+    the base's record of the batches it folded. Snapshots older than the
+    last compaction are gone by design (ValueError); everything newer
+    stays readable until the next compaction folds it in."""
+    return merge_rollups(_store(store_dir).read(as_of_batch))
 
 
 def compact_rollup(spark, store_dir: str) -> None:
-    """Compaction: merge every live partial into one new base dir and
-    commit it with an ATOMIC pointer-file swap (write `_base_pointer.json`
-    aside, `os.replace` into place) — a crash before the swap leaves the
-    old pointer and the old read path fully intact; batch dirs at or below
-    the new high-water mark become dead and are removed only AFTER the
-    commit (best-effort; leftovers are ignored by `_live_dirs`)."""
-    import json
-    import os
-    import shutil
+    """Compaction: merge every live partial into one new base, committed
+    atomically before the folded batch dirs are removed (the store's
+    compaction rule in `sinks.partials`)."""
 
-    broot = os.path.join(store_dir, "batches")
-    live = _live_dirs(store_dir)
-    if not live:
-        raise FileNotFoundError(f"nothing to compact under {store_dir}")
-    upto = max(
-        (
-            int(d.split("=")[1])
-            for d in os.listdir(broot)
-            if d.startswith("batch=")
-        ),
-        default=-1,
-    )
-    base_name = f"base_upto_{upto}"
-    merged = merge_rollups(*[spark.read.parquet(d) for d in live])
-    merged.write.mode("overwrite").parquet(os.path.join(store_dir, base_name))
-    tmp = os.path.join(store_dir, "_base_pointer.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"base": base_name, "upto": upto}, f)
-    os.replace(tmp, os.path.join(store_dir, "_base_pointer.json"))  # commit
-    # post-commit cleanup: dead batch dirs and superseded bases
-    for d in os.listdir(broot):
-        if d.startswith("batch=") and int(d.split("=")[1]) <= upto:
-            shutil.rmtree(os.path.join(broot, d), ignore_errors=True)
-    for d in os.listdir(store_dir):
-        if d.startswith("base_upto_") and d != base_name:
-            shutil.rmtree(os.path.join(store_dir, d), ignore_errors=True)
+    def merge(parts):
+        if parts is None:
+            raise FileNotFoundError(f"nothing to compact under {store_dir}")
+        return merge_rollups(parts)
+
+    _store(store_dir).compact(merge)

@@ -786,10 +786,11 @@ def q_hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics, so the planner sort-merge-joined BOTH sides every
     half-round; an explicit broadcast hint on the score side keeps the
     edge list un-shuffled for all {HITS_ROUNDS}x2 half-steps (round-11,
-    guide §3.1 — at cluster scale the same recurrence flips to a
-    shuffle join past the broadcast cap, a size decision, never a
-    correctness one). Both engines floor-div non-negative sums, so the
-    unrolled-CTE oracle hash-matches bit for bit."""
+    guide §3.1). The hint forces the broadcast at any size: it does not
+    fall back to a shuffle join past the broadcast threshold, so the
+    score table must fit in driver and executor memory. Both engines
+    floor-div non-negative sums, so the unrolled-CTE oracle hash-matches
+    bit for bit."""
     edges = (
         trade_edges(spark, sf_dir)
         .where(F.col("src") < SUPP_OFFSET)

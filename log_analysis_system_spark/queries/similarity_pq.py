@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.topn import grouped_topn
+from ..sinks.partials import PartialStore
 from . import query
 from .similarity import (
     N_DIMS,
@@ -494,6 +495,18 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------- persisted PQ index (build/serve)
 
+def _codes(index_dir: str) -> PartialStore:
+    """The coded corpus: a partial store whose base is the built (or
+    refreshed) corpus and whose batches are appended deltas."""
+    return PartialStore(f"{index_dir}/codes")
+
+
+def _encode(vecs: DataFrame, cb_rows) -> DataFrame:
+    return vecs.withColumn("codes", _pq_codes_udf(cb_rows)("e")).select(
+        "vec_id", "codes", "e", "nrm"
+    )
+
+
 def build_pq_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     """Index-build half of the PQ lifecycle: train the codebooks, encode the
     corpus with the baked-literal projection (zero shuffle), and persist
@@ -503,55 +516,44 @@ def build_pq_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     codes-only index would re-read the corpus for re-ranking instead).
     Rebuild = overwrite both (the index is derived data).
 
-    Layout: the base corpus lands under ``codes/batch=base`` so that
-    `append_pq_index` deltas (``codes/batch=<id>``) sit next to it as
-    sibling partitions — one partition-discovering read serves base +
-    all appended deltas."""
+    Layout: the coded corpus is the compacted base of the ``codes/``
+    partial store (`sinks.partials`), so `append_pq_index` deltas commit
+    next to it as batches and one scan serves base + all deltas. A
+    rebuild's base replaces the old base and every delta."""
     vecs = _quantized(spark, sf_dir)
     cb = train_pq_codebooks(vecs)
     cb.write.mode("overwrite").parquet(f"{index_dir}/codebooks")
     cb_rows = cb.collect()
-    if not cb_rows:
-        vecs.select(
+    if cb_rows:
+        coded = _encode(vecs, cb_rows)
+    else:
+        coded = vecs.select(
             "vec_id",
             F.expr("CAST(array() AS array<int>)").alias("codes"),
             "e",
             "nrm",
-        ).write.mode("overwrite").parquet(f"{index_dir}/codes/batch=base")
-        return
-    (
-        vecs.withColumn("codes", _pq_codes_udf(cb_rows)("e"))
-        .select("vec_id", "codes", "e", "nrm")
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/codes/batch=base")
-    )
+        )
+    _codes(index_dir).compact(lambda _: coded)
 
 
 def append_pq_index(
     spark: SparkSession, index_dir: str, delta: DataFrame, batch_id: int
 ) -> None:
     """Incremental index maintenance: encode a DELTA corpus with the
-    STORED codebooks (no retraining, base never rescanned) and append it
-    as a new parquet partition under ``codes/batch=<id>`` —
-    overwrite-idempotent under replay, like the rollup/view stores.
+    STORED codebooks (no retraining, base never rescanned) and commit it
+    as batch ``batch_id`` of the ``codes/`` partial store — idempotent
+    under replay, like the rollup/view stores.
     ``delta``: (vec_id, e, nrm) quantized vectors (see _quantized).
 
     The quantization residual of skipping retraining is the standard
     production trade (rebuild when drift accumulates); search results for
     appended vectors are exact in the re-rank stage regardless, since ADC
-    only shapes the candidate pool. The batch lands as a sibling
-    partition of the base (``codes/batch=base``), so the serve path's
-    partition-discovering read sees base + all deltas with no
-    compaction step."""
+    only shapes the candidate pool. The serve path's one scan sees
+    base + all deltas with no compaction step."""
     cb_rows = spark.read.parquet(f"{index_dir}/codebooks").collect()
     if not cb_rows:
         raise ValueError(f"no codebooks at {index_dir} — build first")
-    (
-        delta.withColumn("codes", _pq_codes_udf(cb_rows)("e"))
-        .select("vec_id", "codes", "e", "nrm")
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/codes/batch={batch_id}")
-    )
+    _codes(index_dir).write(_encode(delta, cb_rows), batch_id)
 
 
 def search_pq_index(
@@ -565,7 +567,7 @@ def search_pq_index(
     queries_df: (vec_id, e) quantized query vectors."""
     cb_rows = spark.read.parquet(f"{index_dir}/codebooks").collect()
     q_rows = queries_df.select("vec_id", "e").collect()
-    store = spark.read.parquet(f"{index_dir}/codes")
+    store = _codes(index_dir).read()
     out = _pq_adc_topk(store.select("vec_id", "codes"), store, cb_rows, q_rows)
     if out is None:
         return spark.createDataFrame(
@@ -596,7 +598,7 @@ def audit_pq_index_recall(
     served = search_pq_index(spark, index_dir, queries_df).where(
         F.col("rnk") <= k
     ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    store = spark.read.parquet(f"{index_dir}/codes")
+    store = _codes(index_dir).read()
     # Exact truth via the int64 Arrow matmul kernel (one batch matmul per
     # partition instead of a 64-term interpreted HOF fold per
     # store x query pair); the query set is the audit's bounded sample,
@@ -669,28 +671,24 @@ def refresh_pq_index(
     appended deltas) once the audit drops below ``recall_min``.
 
     Rebuild mechanics: the store is re-encoded with freshly trained
-    codebooks into a STAGED directory first, then swapped into place and
-    compacted back to a single ``codes/batch=base`` partition (delta
-    partitions are folded in — the index restarts its append lifecycle).
-    The stage-then-swap is the local-filesystem form of the
-    pointer-flip/rename a production deployment does on object storage;
-    nothing ever reads and overwrites the same files in one job.
+    codebooks and committed as a new base of the ``codes/`` partial
+    store, folding every delta in (`sinks.partials` compaction: staged,
+    committed by one rename, old dirs deleted after). A crash before the
+    commit leaves the old index serving; nothing ever reads and
+    overwrites the same files in one job. A folded batch id counts as
+    committed, so later deltas need new ids.
 
     Returns {"recall_before", "recall_after": float, "refreshed": bool,
     "hits/total_before/after": int} — all exact integers underneath.
     No-op (refreshed=False, after==before) when the audit passes."""
-    import os
-    import shutil
-
     hits_b, tot_b = audit_pq_index_recall(spark, index_dir, queries_df)
     before = (hits_b / tot_b) if tot_b else 1.0
     refreshed = tot_b > 0 and before < recall_min
     if refreshed:
         from pyspark.sql import Window
 
-        store = spark.read.parquet(f"{index_dir}/codes").select(
-            "vec_id", "e", "nrm"
-        )
+        codes = _codes(index_dir)
+        store = codes.read().select("vec_id", "e", "nrm")
         # Stratified re-init: K_CODES seed ids spread across the id range
         # via ntile, so every append batch (drifted mode) contributes
         # seeds — Lloyd's cannot split a far cluster its init gave one
@@ -706,25 +704,15 @@ def refresh_pq_index(
         ).select("vec_id", (F.col("t") - 1).cast("int").alias("code"))
         cb = train_pq_codebooks(store.select("vec_id", "e"), seeds=seed_ids)
         cb_rows = cb.collect()
-        staged = f"{index_dir}/codes_staged"
-        if cb_rows:
-            (
-                store.withColumn("codes", _pq_codes_udf(cb_rows)("e"))
-                .select("vec_id", "codes", "e", "nrm")
-                .write.mode("overwrite")
-                .parquet(staged)
-            )
-            _local_df(
-                spark,
-                [
-                    (int(r["sub"]), int(r["code"]), [int(v) for v in r["cv"]])
-                    for r in cb_rows
-                ],
-                "sub int, code int, cv array<bigint>",
-            ).write.mode("overwrite").parquet(f"{index_dir}/codebooks")
-            shutil.rmtree(f"{index_dir}/codes")
-            os.makedirs(f"{index_dir}/codes")
-            os.rename(staged, f"{index_dir}/codes/batch=base")
+        codes.compact(lambda parts: _encode(parts, cb_rows))
+        _local_df(
+            spark,
+            [
+                (int(r["sub"]), int(r["code"]), [int(v) for v in r["cv"]])
+                for r in cb_rows
+            ],
+            "sub int, code int, cv array<bigint>",
+        ).write.mode("overwrite").parquet(f"{index_dir}/codebooks")
         hits_a, tot_a = audit_pq_index_recall(spark, index_dir, queries_df)
     else:
         hits_a, tot_a = hits_b, tot_b
@@ -774,12 +762,12 @@ def q_pq_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.001 / 0.66 at sf0.01 with per-delta code diversity restored
     (1 → 500 distinct code vectors). The no-op path (healthy audit →
     no rebuild, store untouched) is pytest-pinned separately."""
-    import shutil
     import tempfile
 
     vecs = _quantized(spark, sf_dir)
-    idx = tempfile.mkdtemp(prefix="pq_refresh_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="pq_refresh_", ignore_cleanup_errors=True
+    ) as idx:
         build_pq_index(spark, sf_dir, idx)
         if not spark.read.parquet(f"{idx}/codebooks").head(1):
             return spark.createDataFrame(
@@ -798,8 +786,6 @@ def q_pq_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         n_q = queries.count()
         r = refresh_pq_index(spark, idx, queries)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
     recovered = bool(
         r["refreshed"]
         and r["recall_after"] >= PQ_REFRESH_RECALL_MIN

@@ -24,6 +24,11 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def default_cpus() -> int:
+    """Local parallelism: ``SPARK_GRAFT_CPUS``, else this host's cores."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "log-analysis-system-spark",
     cpus: int | str | None = None,
@@ -33,8 +38,8 @@ def get_spark(
 ) -> SparkSession:
     """Create (or fetch) a SparkSession configured for this engine.
 
-    Parameters default from ``SPARK_GRAFT_CPUS`` (local parallelism) so the same
-    code path serves pytest (local[32]) and the driver's bench harness.
+    ``cpus`` defaults to `default_cpus` (``local[<cores>]``), so pytest, the
+    bench and the driver's harness share one default.
 
     ``hive_warehouse``: opt-in Hive-catalog mode (the reference's prod-mode
     table surface, util/SparkUtils.java:38-45): managed tables + a persistent
@@ -44,7 +49,7 @@ def get_spark(
     implementation is fixed at first-session creation per JVM; use a fresh
     process to switch modes.
     """
-    n = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n = str(cpus or default_cpus())
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)

@@ -9,23 +9,20 @@ model was trained on? This module watches the SAME features through the
 shared `drift_labels` helper, so batch and streaming monitors can never
 disagree about what they measure (the equivalence test pins it).
 
-Design = the incremental rollup store's contract applied to counts:
-counts are mergeable partials, each micro-batch writes its own
-``batches/batch=<id>`` dir (a replayed batch overwrites itself with
-byte-identical content — exactly-once without marker files), and serving
-merges partials + joins the reference. State per batch is O(buckets),
-never O(rows); nothing about the stream's length accumulates anywhere
-except the bounded bucket table.
+Design: counts are mergeable partials, each micro-batch commits its own
+batch to a partial store (`sinks.partials` states the commit and replay
+rule), and serving merges partials + joins the reference. State per
+batch is O(buckets), never O(rows); nothing about the stream's length
+accumulates anywhere except the bounded bucket table.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..queries.data_quality import drift_labels, psi_report
+from ..sinks.partials import PartialStore
 
 
 def bucket_counts(ev: DataFrame) -> DataFrame:
@@ -36,10 +33,9 @@ def bucket_counts(ev: DataFrame) -> DataFrame:
 
 
 def append_drift_batch(batch_df: DataFrame, store_dir: str, batch_id: int) -> None:
-    """foreachBatch body: persist ONE micro-batch's bucket counts.
-    Deterministic content + per-batch dir = idempotent under replay."""
-    bucket_counts(batch_df).write.mode("overwrite").parquet(
-        f"{store_dir}/batches/batch={batch_id}"
+    """foreachBatch body: commit ONE micro-batch's bucket counts."""
+    PartialStore(f"{store_dir}/batches").write(
+        bucket_counts(batch_df), batch_id
     )
 
 
@@ -47,18 +43,11 @@ def serve_drift(spark, store_dir: str, reference: DataFrame) -> DataFrame:
     """Merge the streamed partials into the observed distribution and emit
     per-bucket PSI contributions vs the reference counts (feature, label,
     n). Reads O(batches x buckets) partial rows — never the stream."""
-    broot = os.path.join(store_dir, "batches")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no drift partials under {store_dir}")
-    parts = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        parts = parts.unionByName(spark.read.parquet(d))
-    observed = parts.groupBy("feature", "label").agg(F.sum("n").alias("n"))
+    observed = (
+        PartialStore(f"{store_dir}/batches").read()
+        .groupBy("feature", "label")
+        .agg(F.sum("n").alias("n"))
+    )
     return psi_report(reference, observed)
 
 
@@ -84,11 +73,9 @@ def daily_counts(ev: DataFrame) -> DataFrame:
 
 
 def append_daily_batch(batch_df: DataFrame, store_dir: str, batch_id: int) -> None:
-    """foreachBatch body for the level-shift monitor: persist one
-    micro-batch's daily counts (overwrite-idempotent under replay)."""
-    daily_counts(batch_df).write.mode("overwrite").parquet(
-        f"{store_dir}/daily/batch={batch_id}"
-    )
+    """foreachBatch body for the level-shift monitor: commit one
+    micro-batch's daily counts."""
+    PartialStore(f"{store_dir}/daily").write(daily_counts(batch_df), batch_id)
 
 
 def serve_change_point(spark, store_dir: str) -> DataFrame:
@@ -98,18 +85,11 @@ def serve_change_point(spark, store_dir: str) -> DataFrame:
     is O(days), never O(events)."""
     from ..queries.temporal import cusum_top
 
-    broot = os.path.join(store_dir, "daily")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no daily partials under {store_dir}")
-    parts = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        parts = parts.unionByName(spark.read.parquet(d))
-    daily = parts.groupBy("d").agg(F.sum("x").alias("x"))
+    daily = (
+        PartialStore(f"{store_dir}/daily").read()
+        .groupBy("d")
+        .agg(F.sum("x").alias("x"))
+    )
     return cusum_top(daily)
 
 
@@ -127,13 +107,13 @@ def level_shift_monitor(stream_df: DataFrame, store_dir: str, checkpoint_dir: st
 # ------------------------------------------- streaming sequential test
 
 def append_sprt_batch(batch_df: DataFrame, store_dir: str, batch_id: int) -> None:
-    """foreachBatch body for the SPRT monitor: persist one micro-batch's
-    per-day (successes, trials) partials (overwrite-idempotent under
-    replay; same-day partials from different batches sum at serve time)."""
+    """foreachBatch body for the SPRT monitor: commit one micro-batch's
+    per-day (successes, trials) partials (same-day partials from
+    different batches sum at serve time)."""
     from ..queries.stats_models import sprt_daily_counts
 
-    sprt_daily_counts(batch_df).write.mode("overwrite").parquet(
-        f"{store_dir}/sprt/batch={batch_id}"
+    PartialStore(f"{store_dir}/sprt").write(
+        sprt_daily_counts(batch_df), batch_id
     )
 
 
@@ -146,18 +126,7 @@ def serve_sprt(spark, store_dir: str) -> DataFrame:
     O(days), never O(events)."""
     from ..queries.stats_models import sprt_score
 
-    broot = os.path.join(store_dir, "sprt")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no sprt partials under {store_dir}")
-    parts = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        parts = parts.unionByName(spark.read.parquet(d))
-    daily = parts.groupBy("day").agg(
+    daily = PartialStore(f"{store_dir}/sprt").read().groupBy("day").agg(
         F.sum("s").cast("long").alias("s"),
         F.sum("n").cast("long").alias("n"),
     )
@@ -178,33 +147,13 @@ def sprt_monitor(stream_df: DataFrame, store_dir: str, checkpoint_dir: str):
 # --------------------------------- streaming Wasserstein (W1) monitor
 
 def append_w1_batch(batch_df: DataFrame, store_dir: str, batch_id: int) -> None:
-    """foreachBatch body for a streaming DOCUMENTS frame: persist one
+    """foreachBatch body for a streaming DOCUMENTS frame: commit one
     micro-batch's (source, bucket, n) length-bucket counts — mergeable
-    partials, idempotent under replay (per-batch dir, deterministic
-    content; the `append_drift_batch` contract)."""
+    partials (the `append_drift_batch` contract)."""
     from ..queries.data_quality import length_bucket_counts
 
-    length_bucket_counts(batch_df).write.mode("overwrite").parquet(
-        f"{store_dir}/batches/batch={batch_id}"
-    )
-
-
-def _merged_w1_counts(spark, store_dir: str) -> DataFrame:
-    import os as _os
-
-    broot = _os.path.join(store_dir, "batches")
-    dirs = [
-        _os.path.join(broot, d)
-        for d in sorted(_os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no W1 partials under {store_dir}")
-    # One multi-path scan: plan depth and footer reads stay O(1) in the
-    # number of batches (counts re-aggregate below, so order is moot).
-    parts = spark.read.parquet(*dirs)
-    return parts.groupBy("source", "bucket").agg(
-        F.sum("n").cast("long").alias("n")
+    PartialStore(f"{store_dir}/batches").write(
+        length_bucket_counts(batch_df), batch_id
     )
 
 
@@ -223,7 +172,11 @@ def serve_w1(spark, store_dir: str, reference: DataFrame | None = None) -> DataF
         w1_from_cells,
     )
 
-    merged = _merged_w1_counts(spark, store_dir)
+    merged = (
+        PartialStore(f"{store_dir}/batches").read()
+        .groupBy("source", "bucket")
+        .agg(F.sum("n").cast("long").alias("n"))
+    )
     if reference is None:
         return w1_from_cells(rest_of_corpus_cells(merged))
     ref = reference.select("bucket", F.col("n").cast("long").alias("cb"))
@@ -271,16 +224,10 @@ def serve_burst(spark, store_dir: str):
     O(events)."""
     from ..queries.temporal import burst_label_days
 
-    broot = os.path.join(store_dir, "daily")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no daily partials under {store_dir}")
-    parts = spark.read.parquet(*dirs)
-    daily = parts.groupBy("d").agg(F.sum("x").cast("long").alias("x")).select(
-        F.col("d").alias("day"), "x"
+    daily = (
+        PartialStore(f"{store_dir}/daily").read()
+        .groupBy("d")
+        .agg(F.sum("x").cast("long").alias("x"))
+        .select(F.col("d").alias("day"), "x")
     )
     return burst_label_days(daily)

@@ -5,10 +5,9 @@ body.
 The NB model is a pure function of two count tables — (class, word)
 token counts and per-class doc counts — and counts are SUM-mergeable,
 so the trainer is an incremental-view-maintenance problem, not a
-retraining problem: each micro-batch of TRAIN docs appends its own
-bounded partial (the W1 monitor's contract: per-batch dir, byte-
-identical content under replay), and serving merges the partials and
-calls `queries.nbayes.nb_confusion_from_counts` on whatever eval set
+retraining problem: each micro-batch of TRAIN docs commits its own
+bounded partial to a partial store (`sinks.partials`), and serving
+merges the partials and calls `queries.nbayes.nb_confusion_from_counts` on whatever eval set
 the caller supplies. Per-class token totals, vocabulary size, and
 priors all DERIVE from the merged counts, so no other state exists.
 
@@ -20,39 +19,26 @@ where one class's docs are concentrated in a single late batch.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..queries.nbayes import nb_count_partials
+from ..sinks.partials import PartialStore
 
 
 def append_nb_batch(batch_df: DataFrame, store_dir: str,
                     batch_id: int) -> None:
-    """foreachBatch body for a streaming TRAIN-docs frame: persist one
+    """foreachBatch body for a streaming TRAIN-docs frame: commit one
     batch's token-count and doc-count partials."""
     cw, dc = nb_count_partials(batch_df)
-    cw.write.mode("overwrite").parquet(
-        f"{store_dir}/cw/batch={batch_id}"
-    )
-    dc.write.mode("overwrite").parquet(
-        f"{store_dir}/dc/batch={batch_id}"
-    )
+    PartialStore(f"{store_dir}/cw").write(cw, batch_id)
+    PartialStore(f"{store_dir}/dc").write(dc, batch_id)
 
 
 def _merged(spark, store_dir: str, sub: str, keys: list[str],
             col: str) -> DataFrame:
-    root = os.path.join(store_dir, sub)
-    dirs = [
-        os.path.join(root, d)
-        for d in sorted(os.listdir(root))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no NB partials under {root}")
     return (
-        spark.read.parquet(*dirs)
+        PartialStore(f"{store_dir}/{sub}").read()
         .groupBy(*keys)
         .agg(F.sum(col).cast("long").alias(col))
     )

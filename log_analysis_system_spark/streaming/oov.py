@@ -11,30 +11,28 @@ the same trained vocab map, so they cannot disagree about the rule —
 the equivalence test pins served == batch on identical data (the
 drift_psi monitor pattern).
 
-Contract = the incremental rollup store's: every counter is a mergeable
-sum, each micro-batch writes its own ``batches/batch=<id>`` dir
-(replayed batches overwrite byte-identically — exactly-once without
-marker files), and serving reads O(batches x sources) partial rows,
-never the stream. The trained vocab is pinned at monitor-attach time
-(a tokenizer in production is a frozen artifact; retrain => new store).
+Every counter is a mergeable sum, each micro-batch commits its own batch
+to a partial store (`sinks.partials` states the commit and replay rule),
+and serving reads O(batches x sources) partial rows, never the stream.
+The trained vocab is pinned at monitor-attach time (a tokenizer in
+production is a frozen artifact; retrain => new store).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..queries.bpe import oov_score
+from ..sinks.partials import PartialStore
 
 
 def append_oov_batch(
     batch_df: DataFrame, vocab_map: DataFrame, store_dir: str, batch_id: int
 ) -> None:
-    """foreachBatch body: persist ONE micro-batch's per-source counters."""
-    oov_score(batch_df, vocab_map).write.mode("overwrite").parquet(
-        f"{store_dir}/batches/batch={batch_id}"
+    """foreachBatch body: commit ONE micro-batch's per-source counters."""
+    PartialStore(f"{store_dir}/batches").write(
+        oov_score(batch_df, vocab_map), batch_id
     )
 
 
@@ -42,17 +40,7 @@ def serve_oov(spark, store_dir: str) -> DataFrame:
     """Merge streamed partials into the cumulative per-source audit —
     identical columns (and, on identical data, identical values) to the
     batch `bpe_oov_audit`."""
-    broot = os.path.join(store_dir, "batches")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no OOV partials under {store_dir}")
-    parts = spark.read.parquet(dirs[0])
-    for d in dirs[1:]:
-        parts = parts.unionByName(spark.read.parquet(d))
+    parts = PartialStore(f"{store_dir}/batches").read()
     return parts.groupBy("source").agg(
         F.sum("n_words").alias("n_words"),
         F.sum("n_oov_words").alias("n_oov_words"),

@@ -28,28 +28,27 @@ bounded at segments x R rows.
 
 State per batch is O(days-in-batch x R), never O(rows); nothing about
 the stream's length accumulates anywhere except the bounded partial
-store (compactable by re-summarizing, since the merge is associative).
+store (`sinks.partials`; compactable by re-summarizing, since the merge
+is associative).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..queries.olap_extras import qsr_day_values, qsr_estimates, qsr_summaries
+from ..sinks.partials import PartialStore
 
 
 def append_quantile_batch(
     batch_df: DataFrame, store_dir: str, batch_id: int
 ) -> None:
-    """foreachBatch body for a streaming EVENTS frame: persist one
-    micro-batch's per-day R-rank summaries — mergeable partials,
-    idempotent under replay (per-batch dir, deterministic content; the
+    """foreachBatch body for a streaming EVENTS frame: commit one
+    micro-batch's per-day R-rank summaries — mergeable partials (the
     `append_drift_batch` contract)."""
-    qsr_summaries(qsr_day_values(batch_df)).write.mode("overwrite").parquet(
-        f"{store_dir}/batches/batch={batch_id}"
+    PartialStore(f"{store_dir}/batches").write(
+        qsr_summaries(qsr_day_values(batch_df)), batch_id
     )
 
 
@@ -57,18 +56,7 @@ def serve_quantiles(spark, store_dir: str) -> DataFrame:
     """Serve (q_bp, est_milli, n_total) from the streamed summary
     partials — O(batches x days x R) rows read, never the stream. The
     merge body is the batch query's `qsr_estimates` verbatim."""
-    broot = os.path.join(store_dir, "batches")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no quantile partials under {store_dir}")
-    # One multi-path scan: plan depth and footer reads stay O(1) in the
-    # number of batches (summaries re-merge in qsr_estimates, so order
-    # is moot).
-    parts = spark.read.parquet(*dirs)
+    parts = PartialStore(f"{store_dir}/batches").read()
     return qsr_estimates(parts).select(
         F.col("q").alias("q_bp"),
         "est_milli",

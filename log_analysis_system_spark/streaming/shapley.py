@@ -14,22 +14,21 @@ precedes the earliest purchase, so the merged minima reconstruct the
 coalition masks exactly.
 
 Per-batch state is O(active users x 5 kinds), independent of batch row
-count; replayed batches overwrite their own ``batches/batch=<id>`` dir
-with byte-identical content (exactly-once without marker files). The
-serve path merges the bounded partial table, rebuilds masks, and calls
+count, committed per batch to a partial store (`sinks.partials` states
+the commit and replay rule). The serve path merges the bounded partial
+table, rebuilds masks, and calls
 `queries.behavior.shapley_from_masks` — shared code, so batch and
 stream cannot disagree (pinned by tests/test_streaming_shapley.py).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import epoch_us
 from ..queries.behavior import MARKOV_CHANNELS, SHAPLEY_BITS
+from ..sinks.partials import PartialStore
 
 
 def touch_partials(batch_df: DataFrame) -> DataFrame:
@@ -58,27 +57,17 @@ def touch_partials(batch_df: DataFrame) -> DataFrame:
 def append_shapley_batch(
     batch_df: DataFrame, store_dir: str, batch_id: int
 ) -> None:
-    """foreachBatch body: persist ONE micro-batch's touch minima.
-    Deterministic content + per-batch dir = idempotent under replay."""
-    touch_partials(batch_df).write.mode("overwrite").parquet(
-        f"{store_dir}/batches/batch={batch_id}"
+    """foreachBatch body: commit ONE micro-batch's touch minima."""
+    PartialStore(f"{store_dir}/batches").write(
+        touch_partials(batch_df), batch_id
     )
 
 
 def _merged_minima(spark, store_dir: str) -> DataFrame:
-    broot = os.path.join(store_dir, "batches")
-    dirs = [
-        os.path.join(broot, d)
-        for d in sorted(os.listdir(broot))
-        if d.startswith("batch=")
-    ]
-    if not dirs:
-        raise FileNotFoundError(f"no shapley partials under {store_dir}")
-    # one multi-path scan (the W1 monitor's plan-depth argument); the
-    # MIN monoid makes re-merging order-free
-    parts = spark.read.parquet(*dirs)
+    # the MIN monoid makes re-merging the partials order-free
     return (
-        parts.groupBy("user_id", "kind")
+        PartialStore(f"{store_dir}/batches").read()
+        .groupBy("user_id", "kind")
         .agg(
             F.min(
                 F.struct(F.col("t").alias("t"), F.col("id").alias("id"))

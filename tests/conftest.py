@@ -69,7 +69,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="pytest", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark(app_name="pytest")
     yield s
     s.stop()
 

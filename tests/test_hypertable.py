@@ -55,6 +55,7 @@ def test_incremental_store_lifecycle(spark, tmp_path):
         compact_rollup,
         serve_rollup,
     )
+    from log_analysis_system_spark.sinks.partials import PartialStore
 
     ev = read_events(spark, SF_DIR).select("ts", "value")
     store = str(tmp_path / "store")
@@ -73,12 +74,10 @@ def test_incremental_store_lifecycle(spark, tmp_path):
     # compact: one base dir, same view; late batch after compaction merges
     compact_rollup(spark, store)
     assert _canon(serve_rollup(spark, store)) == full
-    assert os.path.exists(os.path.join(store, "_base_pointer.json"))
-    live_batches = [
-        d for d in os.listdir(os.path.join(store, "batches"))
-        if d.startswith("batch=")
-    ]
-    assert live_batches == []
+    committed = os.listdir(os.path.join(store, "batches"))
+    served = PartialStore(os.path.join(store, "batches")).read().inputFiles()
+    assert len(committed) == 1
+    assert {f.split("/")[-2] for f in served} == set(committed)
 
     # new batch after compaction: view = full history again
     append_rollup_batch(parts[0], store, batch_id=3)
@@ -180,3 +179,33 @@ def test_time_travel_snapshot_reads(spark, tmp_path):
     assert _canon(serve_rollup(spark, store, as_of_batch=2)) == full
     both = merge_rollups(rollup_events(ev), rollup_events(parts[0]))
     assert _canon(serve_rollup(spark, store)) == _canon(both)
+
+
+def test_batch_landing_during_compaction_is_kept(spark, tmp_path, monkeypatch):
+    """Batches that commit while compact_rollup merges must stay in the
+    served view: the next stream batch (id 4) and a slower writer's batch
+    2, whose id lies below batches compaction has already listed."""
+    from log_analysis_system_spark.operators import hypertable
+
+    ev = read_events(spark, SF_DIR).select("ts", "value")
+    store = str(tmp_path / "store")
+    parts = [ev.where(F.abs(F.hash("ts", "value")) % 5 == i) for i in range(5)]
+    for i in (0, 1, 3):
+        hypertable.append_rollup_batch(parts[i], store, batch_id=i)
+
+    merge = hypertable.merge_rollups
+    landed = []
+
+    def merge_while_batches_land(*rollups):
+        if not landed:
+            for i in (2, 4):
+                hypertable.append_rollup_batch(parts[i], store, batch_id=i)
+            landed.append(True)
+        return merge(*rollups)
+
+    with monkeypatch.context() as m:
+        m.setattr(hypertable, "merge_rollups", merge_while_batches_land)
+        hypertable.compact_rollup(spark, store)
+    assert landed
+    served = _canon(hypertable.serve_rollup(spark, store))
+    assert served == _canon(rollup_events(ev))

@@ -1272,6 +1272,7 @@ def test_pq_index_refresh_recovers_recall(spark, tmp_path):
         build_pq_index,
         refresh_pq_index,
     )
+    from log_analysis_system_spark.sinks.partials import PartialStore
 
     idx = str(tmp_path / "pq")
     build_pq_index(spark, SF_DIR, idx)
@@ -1293,9 +1294,10 @@ def test_pq_index_refresh_recovers_recall(spark, tmp_path):
     assert (r["hits_after"], r["total_after"]) == (32, 50)
     # compaction: delta partitions folded into a single base batch,
     # no rows lost, staging dir gone
-    assert sorted(
-        d for d in os.listdir(f"{idx}/codes") if d.startswith("batch=")
-    ) == ["batch=base"]
+    committed = os.listdir(f"{idx}/codes")
+    served = PartialStore(f"{idx}/codes").read().inputFiles()
+    assert len(committed) == 1
+    assert {f.split("/")[-2] for f in served} == set(committed)
     assert not os.path.exists(f"{idx}/codes_staged")
     assert spark.read.parquet(f"{idx}/codes").count() == n_store
     # the drifted mode regained code diversity (was 1 distinct
@@ -1313,8 +1315,6 @@ def test_pq_index_refresh_recovers_recall(spark, tmp_path):
 def test_pq_index_refresh_noop_when_healthy(spark, tmp_path):
     """A healthy index (no drifted append) must NOT be rebuilt: audit
     passes, refreshed=False, store files untouched."""
-    import os
-
     import pyspark.sql.functions as F
 
     from log_analysis_system_spark.queries.similarity import (
@@ -1325,17 +1325,20 @@ def test_pq_index_refresh_noop_when_healthy(spark, tmp_path):
         build_pq_index,
         refresh_pq_index,
     )
+    from log_analysis_system_spark.sinks.partials import PartialStore
 
     idx = str(tmp_path / "pq")
     build_pq_index(spark, SF_DIR, idx)
-    files_before = sorted(os.listdir(f"{idx}/codes/batch=base"))
+    files_before = sorted(PartialStore(f"{idx}/codes").read().inputFiles())
     queries = _quantized(spark, SF_DIR).where(
         F.col("vec_id") < N_QUERIES
     ).select("vec_id", "e")
     r = refresh_pq_index(spark, idx, queries)
     assert r["refreshed"] is False
     assert r["recall_after"] == r["recall_before"] >= 0.5
-    assert sorted(os.listdir(f"{idx}/codes/batch=base")) == files_before
+    assert sorted(
+        PartialStore(f"{idx}/codes").read().inputFiles()
+    ) == files_before
 
 
 def test_perplexity_band_filter_planted(spark, tmp_path):
